@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..session import get_spark, tune
+from ..session import get_spark, state_partitions_at_start, tune
 from ..sources import build_source, connectors
 from ..sources import filesystem as fs_sink
 from .ddl import Parsed, TableDef, parse_statement, split_statements
@@ -2307,12 +2307,13 @@ class Engine:
                 mode_holder["mode"] = mode  # set BEFORE start: first micro-
                 # batch can fire as soon as start() returns
                 try:
-                    q = (
-                        df.writeStream.outputMode(mode)
-                        .option("checkpointLocation", f"{ckpt}-{mode}")
-                        .foreachBatch(cb)
-                        .start()
-                    )
+                    with state_partitions_at_start(df.sparkSession):
+                        q = (
+                            df.writeStream.outputMode(mode)
+                            .option("checkpointLocation", f"{ckpt}-{mode}")
+                            .foreachBatch(cb)
+                            .start()
+                        )
                     qh["q"] = q
                     return q
                 except Exception as e:  # noqa: BLE001
@@ -2381,15 +2382,17 @@ class Engine:
         if df.isStreaming:
             ckpt = f"{self._checkpoint_root}/{uuid.uuid4().hex}"
             if target.connector == "filesystem":
-                query = fs_sink.write_stream(df, target, ckpt)
+                write_stream = fs_sink.write_stream
             elif target.connector in ("kafka", "upsert-kafka"):
                 from ..sources import kafka
 
-                query = kafka.write_stream(df, target, ckpt)
+                write_stream = kafka.write_stream
             else:
                 raise ValueError(
                     f"streaming INSERT into connector {target.connector!r} unsupported"
                 )
+            with state_partitions_at_start(df.sparkSession):
+                query = write_stream(df, target, ckpt)
             # the sink query is already started; the statement just tracks it
             return StreamingStatement(df, lambda _on_batch: query)
         if target.connector == "filesystem":

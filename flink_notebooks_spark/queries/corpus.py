@@ -877,10 +877,12 @@ def streaming_events_anomaly(spark, sf_dir):
     production form is ``streaming_events_anomaly_ttl``
     (queries/streaming3.py), which prunes hours past a watermark horizon
     and evicts idle types (same state fn, ``_anomaly_scan_stream``)."""
-    from .streaming import _run_to_memory
+    from .streaming import _run_to_memory, _table_rowcount
 
     res = _anomaly_scan_stream(spark, sf_dir)
-    return _anomaly_latest(_run_to_memory(res, "update"))
+    return _anomaly_latest(
+        _run_to_memory(res, "update", rows=_table_rowcount(spark, sf_dir, "events"))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1108,10 +1110,12 @@ def streaming_events_funnel(spark, sf_dir):
     ``streaming_events_funnel_ttl`` (queries/streaming3.py), which evicts
     users idle past the attribution horizon via ``EventTimeTimeout``
     (same state fn, ``_funnel_state_stream``)."""
-    from .streaming import _keyed_shards, _run_to_memory
+    from .streaming import _keyed_shards, _run_to_memory, _table_rowcount
 
     res = _funnel_state_stream(spark, sf_dir, shards=_keyed_shards(spark, sf_dir))
-    return _funnel_rollup(_run_to_memory(res, "update"))
+    return _funnel_rollup(
+        _run_to_memory(res, "update", rows=_table_rowcount(spark, sf_dir, "events"))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1308,7 +1312,7 @@ def streaming_quality_filter(spark, sf_dir):
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from .streaming import _run_to_memory, _staged_table_stream
+    from .streaming import _run_to_memory, _staged_table_stream, _table_rowcount
 
     raw = _staged_table_stream(
         spark, sf_dir, "documents", "doc_id",
@@ -1347,7 +1351,9 @@ def streaming_quality_filter(spark, sf_dir):
         "update",
         GroupStateTimeout.NoTimeout,
     )
-    out = _run_to_memory(res, "update")
+    out = _run_to_memory(
+        res, "update", rows=_table_rowcount(spark, sf_dir, "documents")
+    )
     w = Window.partitionBy("source")
     return (
         out.withColumn("maxrev", F.max("rev").over(w))
@@ -1499,12 +1505,15 @@ def streaming_events_retention(spark, sf_dir):
     production form is ``streaming_events_retention_ttl``
     (queries/streaming3.py), which evicts cohort state once the offset
     window is long closed (same state fn, ``_retention_state_stream``)."""
-    from .streaming import _keyed_shards, _run_to_memory
+    from .streaming import _keyed_shards, _run_to_memory, _table_rowcount
 
     res = _retention_state_stream(
         spark, sf_dir, shards=_keyed_shards(spark, sf_dir)
     )
-    return _retention_rollup(spark, _run_to_memory(res, "update"))
+    return _retention_rollup(
+        spark,
+        _run_to_memory(res, "update", rows=_table_rowcount(spark, sf_dir, "events")),
+    )
 
 
 # wire the oracle after the function exists (same SQL as the batch scan)
@@ -1799,10 +1808,12 @@ def events_markov_transitions_stream(spark, sf_dir):
     drop the boundary transition of a returning user, so the NoTimeout
     trade (≈bytes × |users|) is deliberate — at Flink parity, deployments
     that must bound it set a state TTL and accept the same undercount."""
-    from .streaming import _keyed_shards, _run_to_memory
+    from .streaming import _keyed_shards, _run_to_memory, _table_rowcount
 
     res = markov_delta_stream(spark, sf_dir, shards=_keyed_shards(spark, sf_dir))
-    deltas = _run_to_memory(res, "append")
+    deltas = _run_to_memory(
+        res, "append", rows=_table_rowcount(spark, sf_dir, "events")
+    )
     tr = deltas.groupBy("from_type", "to_type").agg(F.sum("n").alias("n"))
     # rename the totals' key: both branches read the same memory-sink view,
     # and Spark's self-join dedup trips on the broadcast hint otherwise
@@ -2164,10 +2175,12 @@ def streaming_budget_curation(spark, sf_dir):
     key — bounded by construction, no TTL needed (NoTimeout correct).""".format(
         b=CURATION_TOKEN_BUDGET
     )
-    from .streaming import _run_to_memory
+    from .streaming import _run_to_memory, _table_rowcount
 
     res = budget_admission_stream(spark, sf_dir)
-    out = _run_to_memory(res, "append")
+    out = _run_to_memory(
+        res, "append", rows=_table_rowcount(spark, sf_dir, "documents")
+    )
     return out.select(
         "source", "doc_id", "n_tokens", "cum_tokens"
     ).orderBy("source", "doc_id")

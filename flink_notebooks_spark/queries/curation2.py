@@ -380,9 +380,13 @@ def streaming_sample_per_source(spark, sf_dir):
     text never enters the stream projection or the state. Restart safety:
     the reservoir is keyed state in the checkpoint — proven by the
     two-phase kill/resume test in tests/test_curation2.py."""
-    from .streaming import _run_to_memory
+    from .streaming import _run_to_memory, _table_rowcount
 
-    out = _run_to_memory(sample_per_source_stream(spark, sf_dir), "update")
+    out = _run_to_memory(
+        sample_per_source_stream(spark, sf_dir),
+        "update",
+        rows=_table_rowcount(spark, sf_dir, "documents"),
+    )
     return sample_latest_revision(out)
 
 

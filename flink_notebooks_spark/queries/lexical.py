@@ -515,7 +515,7 @@ def streaming_token_freq_sketch(spark, sf_dir):
     are monotone non-decreasing, so latest == MAX — the final probe
     estimate takes min-over-rows of that, matching the batch sketch
     cell-for-cell (hence the verbatim oracle).""".format(cells=CMS_D * CMS_W)
-    from .streaming import _run_to_memory, _staged_table_stream
+    from .streaming import _run_to_memory, _staged_table_stream, _table_rowcount
 
     raw = _staged_table_stream(
         spark, sf_dir, "documents", "doc_id",
@@ -536,7 +536,9 @@ def streaming_token_freq_sketch(spark, sf_dir):
         .groupBy("d", "col")
         .agg(F.count("*").alias("c"))
     )
-    out = _run_to_memory(cells, "update")
+    out = _run_to_memory(
+        cells, "update", rows=_table_rowcount(spark, sf_dir, "documents")
+    )
     latest = out.groupBy("d", "col").agg(F.max("c").alias("c"))
     probes = spark.createDataFrame([(w,) for w in CMS_PROBES], "word string")
     pcell = probes.join(
@@ -788,14 +790,16 @@ def streaming_similarity_topk(spark, sf_dir):
     oracle comparison is exact after rounding, so evaluation order is
     load-bearing (cumsum along the vector axis reproduces left-to-right
     IEEE addition bit-for-bit).""".format(s=KNN_STREAM_SHARDS, k=TOPK_K)
-    from .streaming import _run_to_memory
+    from .streaming import _run_to_memory, _table_rowcount
 
     res = knn_topk_stream(spark, sf_dir)
     if res is None:  # empty corpus -> no query batch, nothing to serve
         return spark.createDataFrame(
             [], "q_id long, nn_id long, sim double, rn int"
         )
-    out = _run_to_memory(res, "update")
+    out = _run_to_memory(
+        res, "update", rows=_table_rowcount(spark, sf_dir, "embeddings")
+    )
     return _knn_latest_topk(out)
 
 

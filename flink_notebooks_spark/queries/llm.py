@@ -1067,6 +1067,26 @@ def _lsh_bucket_rows(sigged, salt_plan: dict[str, int]):
     )
 
 
+def _shard_bucket_pairs(pdf, bucket_pairs):
+    """Run the per-bucket kernel ``bucket_pairs(key, rows)`` over every LSH
+    bucket ``(band, sig, i, j)`` in one shard's rows and concatenate the
+    (a, b) pairs. ``dropna=False``: pandas drops a group whose key holds a
+    null by default, which would lose that bucket's pairs without a trace;
+    shard_state's in-shard groupby follows the same rule."""
+    import pandas as pd
+
+    outs = [
+        bucket_pairs(key, grp)
+        for key, grp in pdf.groupby(
+            ["band", "sig", "i", "j"], sort=False, dropna=False
+        )
+    ]
+    outs = [o for o in outs if len(o)]
+    if not outs:
+        return pd.DataFrame({"a": [], "b": []}, dtype="int64")
+    return pd.concat(outs, ignore_index=True)
+
+
 def cluster_pairs_lsh_df(
     spark,
     sf_dir,
@@ -1193,16 +1213,6 @@ def cluster_pairs_lsh_df(
     # repartition produced, just without ~40 function dispatches per task.
     n_shards = 4 * spark.sparkContext.defaultParallelism
 
-    def shard_pairs(pdf):
-        outs = [
-            bucket_pairs(key, grp)
-            for key, grp in pdf.groupby(["band", "sig", "i", "j"], sort=False)
-        ]
-        outs = [o for o in outs if len(o)]
-        if not outs:
-            return pd.DataFrame({"a": [], "b": []}, dtype="int64")
-        return pd.concat(outs, ignore_index=True)
-
     cand = (
         buckets.withColumn(
             "bshard",
@@ -1212,7 +1222,9 @@ def cluster_pairs_lsh_df(
         )
         .repartition(n_shards, "bshard")
         .groupBy("bshard")
-        .applyInPandas(lambda key, pdf: shard_pairs(pdf), "a long, b long")
+        .applyInPandas(
+            lambda key, pdf: _shard_bucket_pairs(pdf, bucket_pairs), "a long, b long"
+        )
     )
     # exact fp64 verification on the candidate set only — candidates are
     # proportional to true near-duplicates, so this join-back moves orders
@@ -3383,10 +3395,17 @@ def _word_freq_joined(spark, sf_dir, broadcast_cap: int = TF_BROADCAST_CAP):
     Memoized + persisted per (session, dataset, cap) like the cosine GEMM:
     tf_quality_features and unigram_logprob both consume this pass, and a
     real pipeline at scale would likewise share the scan across features
-    rather than recompute the frequency join per metric."""
+    rather than recompute the frequency join per metric.
+
+    A memo hit whose cache a user ``clearCache()`` dropped is persisted
+    again, so the entry never silently loses its DISK_ONLY level."""
+    from pyspark import StorageLevel
+
     key = (spark.sparkContext.applicationId, sf_dir, broadcast_cap)
     hit_df = _WORD_FREQ_MEMO.get(key)
     if hit_df is not None:
+        if hit_df.storageLevel == StorageLevel.NONE:
+            persist_for_self_join(hit_df)
         return hit_df
     t = tokenized_docs(spark, sf_dir)
     w = t.select("doc_id", F.explode("ws").alias("word"))

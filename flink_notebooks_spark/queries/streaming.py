@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import events_stream_schema, load_table, stream_ts_cols
-from ..session import tune
+from ..session import state_partitions_at_start, tune
 from ._registry import query, sql_dsum
 from .relational import SEQ_GROUP_ORACLE
 
@@ -47,14 +47,15 @@ def _read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream_ts_cols(raw)
 
 
-def _run_to_memory(df: DataFrame, mode: str, partitions: int = 8) -> DataFrame:
+def _run_to_memory(df: DataFrame, mode: str, rows: int | None = None) -> DataFrame:
     """Run a bounded streaming query into a memory sink; return the table.
 
-    Stateful streaming instantiates one state store per shuffle partition;
-    for these bounded single-file replays 64 stores are pure overhead, so the
-    partition count is scoped down around query start (the conf is captured
-    at start, so restoring it immediately after is safe). On a real cluster
-    size this to the executor count via spark.sql.shuffle.partitions.
+    Stateful streaming instantiates one state store per shuffle partition,
+    and every store is a task and a commit on every trigger. The count is
+    the session rule :func:`session.state_partitions` over ``rows``, the
+    source's row count (one task wave when None), scoped around query start
+    only: Spark captures the conf at start, and batch queries keep the
+    session's value.
 
     The checkpoint is explicit and UNIQUE under the ephemeral root
     (io.ephemeral_dir): these replays used a throwaway temp checkpoint
@@ -66,9 +67,7 @@ def _run_to_memory(df: DataFrame, mode: str, partitions: int = 8) -> DataFrame:
 
     spark = df.sparkSession
     name = "strm_" + uuid.uuid4().hex[:12]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
-    try:
+    with state_partitions_at_start(spark, rows):
         q = (
             df.writeStream.format("memory")
             .queryName(name)
@@ -77,8 +76,6 @@ def _run_to_memory(df: DataFrame, mode: str, partitions: int = 8) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     q.awaitTermination()
     return spark.table(name)
 
@@ -108,7 +105,7 @@ def streaming_tumble_window(spark, sf_dir):
             F.sum(F.col("value").cast("decimal(18,2)")).alias("sv_dec"),
         )
     )
-    out = _run_to_memory(agg, "complete")
+    out = _run_to_memory(agg, "complete", rows=_table_rowcount(spark, sf_dir, "events"))
     return out.select(
         # window.start is TimestampType (UTC instant) → epoch seconds
         F.unix_timestamp("win.start").alias("w"),
@@ -130,7 +127,7 @@ def streaming_dedup_keys(spark, sf_dir):
     """
     stream = _read_events_stream(spark, sf_dir)
     dedup = stream.dropDuplicates(["user_id", "event_type"]).select("user_id", "event_type")
-    out = _run_to_memory(dedup, "append")
+    out = _run_to_memory(dedup, "append", rows=_table_rowcount(spark, sf_dir, "events"))
     return out.orderBy("user_id", "event_type")
 
 
@@ -159,7 +156,7 @@ def streaming_session_window(spark, sf_dir):
     agg = stream.groupBy(
         F.session_window("ev_time", f"{SESSION_GAP_S} seconds").alias("win"), "user_id"
     ).agg(F.count("*").alias("n_events"))
-    out = _run_to_memory(agg, "complete")
+    out = _run_to_memory(agg, "complete", rows=_table_rowcount(spark, sf_dir, "events"))
     return out.select(
         "user_id",
         "n_events",
@@ -207,11 +204,9 @@ def streaming_interval_join(spark, sf_dir):
         & (F.col("c_time") < F.col("p_time")),
         "inner",
     )
-    # 4 state partitions measured fastest for this DOUBLE-stateful plan
-    # (two watermarked scans + join state; r6 median-of-3: 2.16 s vs
-    # 2.62 s at 8): per-partition per-trigger machinery dominates below
-    # core count. At cluster scale size to executors via shuffle conf.
-    out = _run_to_memory(joined.select("p_id"), "append", partitions=4)
+    out = _run_to_memory(
+        joined.select("p_id"), "append", rows=_table_rowcount(spark, sf_dir, "events")
+    )
     return out.groupBy("p_id").agg(F.count("*").alias("n_clicks")).orderBy("p_id")
 
 
@@ -274,7 +269,9 @@ def streaming_stateful_sessionize(spark, sf_dir):
         "none",
         shards=_keyed_shards(spark, sf_dir),
     )
-    out = _run_to_memory(sessions, "update")
+    out = _run_to_memory(
+        sessions, "update", rows=_table_rowcount(spark, sf_dir, "events")
+    )
     return out.orderBy("user_id", "sid")
 
 
@@ -380,8 +377,8 @@ def _staged_table_stream(
     # 32-core host idle through the heaviest stage of every trigger
     # (round-14 probe: the 1250-doc signature projection measured ~1.5 s at
     # 8 tasks vs ~0.4 s at defaultParallelism). The STATE exchange further
-    # down is scoped separately (_run_to_memory's partitions arg) — this
-    # count only spreads the stateless per-row compute.
+    # down is sized separately (session.state_partitions, scoped at query
+    # start) — this count only spreads the stateless per-row compute.
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -495,7 +492,11 @@ def streaming_dedup_minhash(spark, sf_dir):
     Duplicate candidate emissions (same pair caught by several
     bands/triggers) are collapsed after the sink — the verified rows are
     identical, so DISTINCT is exact.""".format(cap=STREAM_BUCKET_CAP)
-    out = _run_to_memory(_minhash_pair_stream(spark, sf_dir), "append")
+    out = _run_to_memory(
+        _minhash_pair_stream(spark, sf_dir),
+        "append",
+        rows=_table_rowcount(spark, sf_dir, "documents"),
+    )
     return out.distinct().orderBy("a", "b")
 
 
@@ -735,7 +736,11 @@ def streaming_dedup_embedding(spark, sf_dir):
     80×). Exact fp64 cosine verification is a broadcast stream-static
     join — the fp64 corpus never enters the state store, matching the
     batch contract that only the signature stage touches embeddings."""
-    out = _run_to_memory(_embedding_pair_stream(spark, sf_dir), "append")
+    out = _run_to_memory(
+        _embedding_pair_stream(spark, sf_dir),
+        "append",
+        rows=_table_rowcount(spark, sf_dir, "embeddings"),
+    )
     return out.distinct().orderBy("a", "b")
 
 
@@ -1191,10 +1196,9 @@ def streaming_match_recognize(spark, sf_dir):
         """,
         close_after="1 second",
     )
-    # 16 keyed-state partitions measured fastest at sf0.1 (r6: 4.2 s vs
-    # 4.8–5.4 s at 32): the per-trigger per-partition machinery floor
-    # outweighs extra matcher parallelism once tasks < cores
-    out = _run_to_memory(matched, "append", partitions=16)
+    out = _run_to_memory(
+        matched, "append", rows=_table_rowcount(spark, sf_dir, "events")
+    )
     return out.select("user_id", "start_us", "end_us", "n_clicks").orderBy(
         "user_id", "start_us"
     )
@@ -1224,7 +1228,9 @@ def streaming_seq_group(spark, sf_dir):
         """,
         close_after="1 second",
     )
-    out = _run_to_memory(matched, "append", partitions=16)
+    out = _run_to_memory(
+        matched, "append", rows=_table_rowcount(spark, sf_dir, "events")
+    )
     return out.select("user_id", "start_us", "end_us", "n_pairs").orderBy(
         "user_id", "start_us"
     )
@@ -1251,7 +1257,9 @@ def streaming_lookup_join(spark, sf_dir):
     joined = stream.join(
         F.broadcast(dim), stream["user_id"] == dim["c_custkey"], "inner"
     ).select("event_id", "c_nationkey", "c_mktsegment")
-    out = _run_to_memory(joined, "append")
+    out = _run_to_memory(
+        joined, "append", rows=_table_rowcount(spark, sf_dir, "events")
+    )
     return out.orderBy("event_id")
 
 
@@ -1291,7 +1299,12 @@ def streaming_topn(spark, sf_dir, mode: str | None = None):
         F.sum(F.col("value").cast("decimal(18,2)")).alias("total_dec"),
         F.count("*").alias("n"),
     )
-    rows, _sizes = _incremental_topn(agg, n=10, exact_retractions=mode == "retract")
+    rows, _sizes = _incremental_topn(
+        agg,
+        n=10,
+        source_rows=_table_rowcount(spark, sf_dir, "events"),
+        exact_retractions=mode == "retract",
+    )
     return spark.createDataFrame(
         [(uid, float(total), cnt) for uid, total, cnt in rows],
         "user_id long, total double, n long",
@@ -1332,7 +1345,7 @@ def _topn_value_mode(path: str) -> str:
 def _incremental_topn(
     agg_df: DataFrame,
     n: int,
-    partitions: int = 8,
+    source_rows: int | None = None,
     exact_retractions: bool = False,
     state_path: str | None = None,
     n_buckets: int = 16,
@@ -1397,6 +1410,10 @@ def _incremental_topn(
     amortized. Without compaction the append-only table would grow with
     TOTAL churn, not distinct keys (VERDICT r6/r7 #2). The default stays
     the bounded tracked-set mode.
+
+    The aggregation's state partitions follow the session rule
+    (:func:`session.state_partitions`) over ``source_rows``, the source's
+    row count (one task wave when None).
 
     Returns (rows, batch_sizes): rows are (key, total, count) tuples sorted
     (total DESC, key ASC); batch_sizes records per-trigger driver-transfer
@@ -1506,11 +1523,9 @@ def _incremental_topn(
         if debug is not None:
             debug.setdefault("tracked_sizes", []).append(len(tracked))
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
-    try:
-        from ..io import ephemeral_dir
+    from ..io import ephemeral_dir
 
+    with state_partitions_at_start(spark, source_rows):
         q = (
             agg_df.writeStream.foreachBatch(merge)
             .outputMode("update")
@@ -1518,8 +1533,6 @@ def _incremental_topn(
             .trigger(availableNow=True)
             .start()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     q.awaitTermination()
     if exact_retractions:
         from pyspark.errors import AnalysisException
@@ -1662,9 +1675,7 @@ def streaming_cdc_apply(spark, sf_dir):
         .parquet(src)
     )
     changes = cdc.parse_debezium(raw, "value", row_type)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with state_partitions_at_start(spark, _table_rowcount(spark, sf_dir, "orders")):
         q = cdc.apply_changelog_stream(
             changes,
             keys=["o_orderkey"],
@@ -1672,8 +1683,6 @@ def streaming_cdc_apply(spark, sf_dir):
             checkpoint_path=os.path.join(workdir, "ckpt"),
             n_buckets=16,
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     q.awaitTermination()
     snap = cdc.changelog_state_snapshot(spark, os.path.join(workdir, "state"))
     return snap.select("o_orderkey", "price", "o_orderstatus").orderBy("o_orderkey")

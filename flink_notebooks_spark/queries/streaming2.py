@@ -16,7 +16,7 @@ key count instead of accumulating.
 from __future__ import annotations
 
 from ._registry import query
-from .streaming import _read_events_stream, _run_to_memory
+from .streaming import _read_events_stream, _run_to_memory, _table_rowcount
 
 # TTL for the registered replay. Semantics contract (same as Flink's
 # table.exec.state.ttl): duplicates arriving within DEDUP_TTL of the first
@@ -46,5 +46,5 @@ def streaming_dedup_keys_ttl(spark, sf_dir):
     dedup = stream.dropDuplicatesWithinWatermark(["user_id", "event_type"]).select(
         "user_id", "event_type"
     )
-    out = _run_to_memory(dedup, "append")
+    out = _run_to_memory(dedup, "append", rows=_table_rowcount(spark, sf_dir, "events"))
     return out.orderBy("user_id", "event_type")

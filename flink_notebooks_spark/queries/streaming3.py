@@ -52,6 +52,7 @@ from .streaming import (
     _minhash_pair_stream,
     _run_to_memory,
     _staged_events_stream,
+    _table_rowcount,
 )
 
 # Attribution/cohort horizon for the per-user and per-type operators: state
@@ -86,7 +87,9 @@ def streaming_events_funnel_ttl(spark, sf_dir):
         horizon_s=EVENTS_STATE_HORIZON_S,
         shards=_keyed_shards(spark, sf_dir),
     )
-    return _funnel_rollup(_run_to_memory(res, "update"))
+    return _funnel_rollup(
+        _run_to_memory(res, "update", rows=_table_rowcount(spark, sf_dir, "events"))
+    )
 
 
 @query("streaming_events_retention_ttl", oracle=RETENTION_ORACLE)
@@ -104,7 +107,10 @@ def streaming_events_retention_ttl(spark, sf_dir):
         horizon_s=EVENTS_STATE_HORIZON_S,
         shards=_keyed_shards(spark, sf_dir),
     )
-    return _retention_rollup(spark, _run_to_memory(res, "update"))
+    return _retention_rollup(
+        spark,
+        _run_to_memory(res, "update", rows=_table_rowcount(spark, sf_dir, "events")),
+    )
 
 
 @query("streaming_events_anomaly_ttl", oracle=ANOMALY_ORACLE)
@@ -117,7 +123,9 @@ def streaming_events_anomaly_ttl(spark, sf_dir):
     whole. The registered horizon exceeds the fixture span, so the replay
     still matches the full-history batch oracle."""
     res = _anomaly_scan_stream(spark, sf_dir, horizon_s=EVENTS_STATE_HORIZON_S)
-    return _anomaly_latest(_run_to_memory(res, "update"))
+    return _anomaly_latest(
+        _run_to_memory(res, "update", rows=_table_rowcount(spark, sf_dir, "events"))
+    )
 
 
 @query("streaming_stateful_sessionize_ttl", oracle=SESSIONIZE_ORACLE)
@@ -142,6 +150,7 @@ def streaming_stateful_sessionize_ttl(spark, sf_dir):
             spark, sf_dir, shards=_keyed_shards(spark, sf_dir)
         ),
         "append",
+        rows=_table_rowcount(spark, sf_dir, "events"),
     )
     # the end-of-input sentinel key (user_id = -1) never times out and never
     # emits; filter defensively anyway
@@ -228,7 +237,9 @@ def streaming_dedup_minhash_ttl(spark, sf_dir):
     form exactly (pinned by tests, rows-only like the original — LSH
     candidates are probabilistic)."""
     out = _run_to_memory(
-        _minhash_pair_stream(spark, sf_dir, ttl_s=DEDUP_SIG_TTL_S), "append"
+        _minhash_pair_stream(spark, sf_dir, ttl_s=DEDUP_SIG_TTL_S),
+        "append",
+        rows=_table_rowcount(spark, sf_dir, "documents"),
     )
     return out.distinct().orderBy("a", "b")
 
@@ -242,6 +253,8 @@ def streaming_dedup_embedding_ttl(spark, sf_dir):
     which is the TTL semantics. Replay fits one window → exact parity with
     the unbounded form (pinned by tests)."""
     out = _run_to_memory(
-        _embedding_pair_stream(spark, sf_dir, ttl_s=DEDUP_SIG_TTL_S), "append"
+        _embedding_pair_stream(spark, sf_dir, ttl_s=DEDUP_SIG_TTL_S),
+        "append",
+        rows=_table_rowcount(spark, sf_dir, "embeddings"),
     )
     return out.distinct().orderBy("a", "b")

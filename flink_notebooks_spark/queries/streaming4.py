@@ -46,6 +46,7 @@ from .streaming import (
     _read_events_stream,
     _run_to_memory,
     _staged_events_stream,
+    _table_rowcount,
 )
 from .streaming3 import EVENTS_STATE_HORIZON_S as IDLE_HORIZON_S
 
@@ -145,7 +146,11 @@ def streaming_over_range_agg(spark, sf_dir):
     idle keys evict whole on an event-time timer. The bounded replay's
     sentinel matures every real row, so the output hash-matches the batch
     window-SQL oracle exactly."""
-    out = _run_to_memory(_over_state_stream(spark, sf_dir, "range"), "append")
+    out = _run_to_memory(
+        _over_state_stream(spark, sf_dir, "range"),
+        "append",
+        rows=_table_rowcount(spark, sf_dir, "events"),
+    )
     return out.filter(F.col("user_id") >= 0).orderBy(
         "user_id", "ts_us", "event_id"
     )
@@ -171,7 +176,11 @@ def streaming_over_rows_agg(spark, sf_dir):
     frame in (event time, event_id) order. Retention per key = the last 5
     emitted rows + the unmature buffer; same watermark-mature emission and
     idle-horizon eviction as the RANGE form."""
-    out = _run_to_memory(_over_state_stream(spark, sf_dir, "rows"), "append")
+    out = _run_to_memory(
+        _over_state_stream(spark, sf_dir, "rows"),
+        "append",
+        rows=_table_rowcount(spark, sf_dir, "events"),
+    )
     return out.filter(F.col("user_id") >= 0).orderBy(
         "user_id", "ts_us", "event_id"
     )
@@ -221,7 +230,7 @@ def streaming_over_unbounded_agg(spark, sf_dir):
         idle_horizon_s=IDLE_HORIZON_S,
         shards=_over_shards(spark, sf_dir),
     )
-    out = _run_to_memory(res, "append")
+    out = _run_to_memory(res, "append", rows=_table_rowcount(spark, sf_dir, "events"))
     return out.filter(F.col("user_id") >= 0).orderBy(
         "user_id", "ts_us", "event_id"
     )
@@ -266,7 +275,9 @@ def streaming_window_join(spark, sf_dir):
     tests/test_streaming4.py — declaring the watermark on the window struct
     itself joins correctly but never cleans state)."""
     joined = _window_join_stream(spark, sf_dir)
-    out = _run_to_memory(joined, "append", partitions=4)
+    out = _run_to_memory(
+        joined, "append", rows=_table_rowcount(spark, sf_dir, "events")
+    )
     return out.orderBy("w_start", "user_id", "view_id", "purchase_id")
 
 
@@ -359,7 +370,11 @@ def streaming_window_topn(spark, sf_dir):
     every window's state is freed at close, so retention equals the
     watermark lag. Ties break on event_type (deterministic, matching the
     oracle)."""
-    out = _run_to_memory(_window_topn_stream(spark, sf_dir), "append", partitions=4)
+    out = _run_to_memory(
+        _window_topn_stream(spark, sf_dir),
+        "append",
+        rows=_table_rowcount(spark, sf_dir, "events"),
+    )
     return out.orderBy("w_start", "rk")
 
 
@@ -476,5 +491,5 @@ def streaming_window_dedup(spark, sf_dir):
             F.col("first.ts_us").alias("first_ts_us"),
         )
     )
-    out = _run_to_memory(dedup, "append", partitions=4)
+    out = _run_to_memory(dedup, "append", rows=_table_rowcount(spark, sf_dir, "events"))
     return out.filter(F.col("user_id") >= 0).orderBy("w_start", "user_id")

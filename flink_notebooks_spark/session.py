@@ -11,6 +11,8 @@ scale with the cluster, not with these local defaults.
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -235,12 +237,58 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
+# Source rows per state partition below one task wave. From a 1/2/4/8
+# state-partition sweep on a 4-core host (NOTES.md, "State partitions"):
+# the smallest sf0.1 source (2,000 embedding rows) ran fastest at 2 and
+# 1.6x slower at 1, and every larger source ran fastest at or near one
+# wave (4), never above it: each state partition is a task and a
+# state-store commit on every trigger, whether or not it holds rows.
+ROWS_PER_STATE_PARTITION = 1_000
+
+_STATE_CONF = "spark.sql.shuffle.partitions"
+_STATE_CONF_LOCK = threading.Lock()
+
+
+def state_partitions(spark: SparkSession, rows: int | None = None) -> int:
+    """State-partition count for a streaming query over ``rows`` source rows:
+    one task wave (``defaultParallelism``) at most, fewer when the data is
+    small, and one wave when the row count is unknown.
+
+    Streaming state has no AQE coalescing: each state partition is a task
+    and a state-store commit on every trigger, so the count is sized to the
+    data and the cores, never to a literal."""
+    par = spark.sparkContext.defaultParallelism
+    if rows is None:
+        return par
+    return max(1, min(par, -(-int(rows) // ROWS_PER_STATE_PARTITION)))
+
+
+@contextmanager
+def state_partitions_at_start(spark: SparkSession, rows: int | None = None):
+    """Run a streaming query's ``start()`` inside this block: the session's
+    shuffle-partition count is :func:`state_partitions` while the query
+    captures it, and the previous value is restored on exit, so batch
+    queries keep theirs. A query restarted from an existing checkpoint
+    keeps the count recorded in its offset log (Spark restores it), so the
+    rule sizes new checkpoints only. The lock keeps two concurrent starts
+    on one session from restoring each other's value."""
+    with _STATE_CONF_LOCK:
+        prev = spark.conf.get(_STATE_CONF)
+        spark.conf.set(_STATE_CONF, str(state_partitions(spark, rows)))
+        try:
+            yield
+        finally:
+            spark.conf.set(_STATE_CONF, prev)
+
+
 def get_spark(app_name: str = "flink-notebooks-spark", cpus: int | None = None) -> SparkSession:
     """Build (or get) a tuned local SparkSession.
 
     ``cpus`` defaults to $SPARK_GRAFT_CPUS or all cores. Shuffle partitions
     default to 2× cores locally; AQE coalesces down as needed. On a real
     cluster you would size this to ~2-3× total executor cores instead.
+    Streaming state has no such coalescing, so every streaming query start
+    scopes its own count (:func:`state_partitions_at_start`).
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))

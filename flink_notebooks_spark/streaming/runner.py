@@ -15,6 +15,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
+from ..session import state_partitions_at_start
+
 
 @dataclass
 class SinkSpec:
@@ -32,7 +34,12 @@ class SinkSpec:
 def start_sink(df: DataFrame, spec: SinkSpec, query_name: str | None = None) -> StreamingQuery:
     """Start a checkpointed streaming write. The checkpoint directory is the
     unit of exactly-once recovery — reusing it resumes from the last commit;
-    a new one reprocesses from the source's earliest offsets."""
+    a new one reprocesses from the source's earliest offsets.
+
+    A new checkpoint gets one task wave of state partitions
+    (:func:`session.state_partitions`, an unbounded source has no row
+    count); a reused one keeps the count recorded in its offset log, since
+    Spark restores it from there."""
     if not spec.checkpoint:
         raise ValueError("SinkSpec.checkpoint is required for durable sinks")
     w = (
@@ -50,7 +57,8 @@ def start_sink(df: DataFrame, spec: SinkSpec, query_name: str | None = None) -> 
         w = w.trigger(availableNow=True)
     elif spec.trigger_interval:
         w = w.trigger(processingTime=spec.trigger_interval)
-    return w.start()
+    with state_partitions_at_start(df.sparkSession):
+        return w.start()
 
 
 def drain(df: DataFrame, spec: SinkSpec, query_name: str | None = None) -> None:

@@ -1124,7 +1124,14 @@ def test_warm_shared_caches_matches_direct_results(spark, sf_dir):
     pure materialization: downstream consumers read the same rows as
     computing the pair tables directly. Runs the warm path, then checks
     the jaccard pair set (the deepest DAG it materializes) row-for-row."""
+    from pyspark.sql import functions as F
+
+    from flink_notebooks_spark.io import load_table
     from flink_notebooks_spark.queries.llm import (
+        NGRAMS,
+        WORDS,
+        _jaccard_candidates,
+        _verify_pairs,
         jaccard_pairs_df,
         warm_shared_caches,
     )
@@ -1135,10 +1142,47 @@ def test_warm_shared_caches_matches_direct_results(spark, sf_dir):
         for r in jaccard_pairs_df(spark, sf_dir).collect()
     )
     assert got, "expected verified jaccard pairs at fixture scale"
-    # recompute from scratch on an un-warmed path: same pairs
-    spark.catalog.clearCache()
+    # recompute from the raw table on an un-warmed path: same pairs. The
+    # plan matches none of the session's cached plans, so it reads no
+    # cache; the shared session's caches are left as they are (clearCache()
+    # would wipe them for every later test, and a newSession() shares the
+    # CacheManager, so it would not isolate this either)
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id", F.expr(WORDS).alias("ws"))
+        .select("doc_id", F.expr(NGRAMS.format(ws="ws", k=5)).alias("shingles"))
+        .filter(F.size("shingles") > 0)
+    )
+    sh = docs.select("doc_id", F.explode("shingles").alias("s")).select(
+        "doc_id", F.xxhash64("s").alias("h")
+    )
     ref = sorted(
         (r["a"], r["b"], round(r["jac"], 6))
-        for r in jaccard_pairs_df(spark, sf_dir).collect()
+        for r in _verify_pairs(docs, _jaccard_candidates(sh), 0.8).collect()
     )
     assert got == ref
+
+
+def test_shard_bucket_pairs_keeps_null_keyed_bucket():
+    """The in-shard bucket groupby must not drop a bucket whose key holds a
+    null (pandas' default ``dropna=True`` would, losing its pairs)."""
+    import pandas as pd
+
+    from flink_notebooks_spark.queries.llm import _shard_bucket_pairs
+
+    pdf = pd.DataFrame(
+        {
+            "band": [0, 0, 1, 1],
+            "sig": [5, 5, None, None],
+            "i": [0, 0, 0, 0],
+            "j": [0, 0, 0, 0],
+            "vec_id": [1, 2, 3, 4],
+        }
+    )
+
+    def kernel(key, grp):
+        ids = grp["vec_id"].tolist()
+        return pd.DataFrame({"a": [min(ids)], "b": [max(ids)]})
+
+    out = _shard_bucket_pairs(pdf, kernel)
+    assert sorted(map(tuple, out[["a", "b"]].values.tolist())) == [(1, 2), (3, 4)]

@@ -565,6 +565,33 @@ def test_corpus_sized_caches_are_disk_only(spark, sf_dir):
     assert tokenized_docs(spark, sf_dir).storageLevel == StorageLevel.MEMORY_AND_DISK
 
 
+def test_word_freq_memo_restores_disk_only_after_clear_cache(spark, sf_dir):
+    """A user ``clearCache()`` drops the memoized word-frequency join's
+    cache; the next query through the memo must persist it again at
+    DISK_ONLY instead of silently running uncached (or resident)."""
+    from types import ModuleType
+
+    from pyspark import StorageLevel
+
+    from flink_notebooks_spark import queries
+    from flink_notebooks_spark.queries.llm import _word_freq_joined
+
+    assert _word_freq_joined(spark, sf_dir).storageLevel == StorageLevel.DISK_ONLY
+    spark.catalog.clearCache()
+    try:
+        again = _word_freq_joined(spark, sf_dir)
+        assert again.storageLevel == StorageLevel.DISK_ONLY
+        assert again.count() > 0
+    finally:
+        # the other module memos do not heal yet: drop them so later tests
+        # on this shared session start cold instead of reading uncached hits
+        mods = [m for m in vars(queries).values() if isinstance(m, ModuleType)]
+        for mod in mods:
+            for name, memo in vars(mod).items():
+                if name.endswith("_MEMO") and isinstance(memo, dict):
+                    memo.clear()
+
+
 def test_corpus_audit_aggs_are_two_level(spark, sf_dir):
     """token_length_histogram / events_anomaly / dedup_normalized are
     pre-aggregate-then-small-reduce plans: map-side combine present, no

@@ -203,3 +203,28 @@ def test_sharded_single_shard_equals_per_key(spark, waves_dir):
         ),
     )
     assert sharded == per_key
+
+
+@pytest.mark.parametrize("shards", [None, 2], ids=["per_key", "sharded"])
+def test_set_timeout_timestamp_raises_without_event_timeout(
+    spark, waves_dir, shards
+):
+    """Under ``timeout='none'`` Spark's GroupState rejects
+    ``setTimeoutTimestamp``; the shard shim must fail the query the same
+    way instead of silently arming a timer that never fires."""
+    from pyspark.errors import StreamingQueryException
+
+    from flink_notebooks_spark.operators.shard_state import apply_keyed_state
+
+    keyed = apply_keyed_state(
+        _stream(spark, waves_dir),
+        ["user_id"],
+        _make_sess_fn(),
+        OUT_SCHEMA,
+        "n bigint, last bigint",
+        "append",
+        "none",
+        shards=shards,
+    )
+    with pytest.raises(StreamingQueryException, match="CANNOT_WITHOUT"):
+        _collect_batches(spark, keyed)
